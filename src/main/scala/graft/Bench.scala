@@ -133,9 +133,7 @@ object Bench {
         spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
         val t0 = System.nanoTime()
         try { fn(spark, sfDir).count() } catch {
-          case e: Throwable =>
-            val msg = Option(e.getMessage).getOrElse(e.getClass.getName).takeWhile(_ != '\n').take(200)
-            failed ::= (name, msg)
+          case e: Throwable => failed ::= (name, errorLine(e))
         }
         (System.nanoTime() - t0) / 1e9
       }
@@ -158,16 +156,20 @@ object Bench {
     def r2(v: Double) = String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
     val qs3 = results.map { case (k, v) => "\"" + k + "\":" + r3(v) }
       .mkString("{", ",", "}")
-    val errMap = failed.reverse.map { case (k, m) =>
-      "\"" + k + "\":\"" + m.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-    }.mkString("{", ",", "}")
     val total = results.map(_._2).sum
     // approximate-tier metrology (untimed): recall@k of each no_oracle
     // entry vs its exact comparator on the SAME corpus, so a
     // banding/probe-parameter regression shows up as a number in the
-    // bench record instead of needing an eyeball diff
-    val recallPairs = (try recalls(spark, sfDir) catch { case _: Throwable => Map.empty[String, Double] })
-      .toSeq.sortBy(_._1)
+    // bench record instead of needing an eyeball diff. A failed pass
+    // is an error like a failed entry: it flips the exit code.
+    val recallPairs = (try recalls(spark, sfDir) catch {
+      case e: Throwable =>
+        failed ::= ("recall", errorLine(e))
+        Map.empty[String, Double]
+    }).toSeq.sortBy(_._1)
+    val errMap = failed.reverse.map { case (k, m) =>
+      "\"" + k + "\":\"" + m.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
+    }.mkString("{", ",", "}")
     val recallMap = recallPairs.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val recallMap2 = recallPairs.map { case (k, v) => "\"" + k + "\":" + r2(v) }
@@ -178,6 +180,9 @@ object Bench {
       s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$qs3,"errors":$errMap,"n_failed":${failed.size},"recall":$recallMap2,"sf":"$sfDir"}"""
     (line, compactLine, failed.nonEmpty)
   }
+
+  private def errorLine(e: Throwable): String =
+    Option(e.getMessage).getOrElse(e.getClass.getName).takeWhile(_ != '\n').take(200)
 
   /** Recall@k of each approximate-by-design entry against its exact
     * comparator on the same corpus and queries — the quantitative

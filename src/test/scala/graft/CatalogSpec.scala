@@ -69,7 +69,7 @@ class CatalogSpec extends SparkSpec {
     assert(cat.listSymbols("OHLCV") == Seq("MSFT"))
   }
 
-  test("listTimeframesBySymbol ≡ per-symbol listTimeframes (manifest + legacy)") {
+  test("listTimeframesBySymbol ≡ per-symbol listTimeframes (manifest + replica root)") {
     val root = freshRoot()
     val cat = new BucketCatalog(spark, root)
     // heterogeneous stored-TF sets across symbols
@@ -77,11 +77,37 @@ class CatalogSpec extends SparkSpec {
       for (tf <- tfs)
         cat.write(TimeBucketKey.parse(s"$sym/$tf/OHLCV"),
           Seq((60L, 1.0, 1.5)).toDF("Epoch", "Open", "Close"))
+    // a replica root has no manifest: both calls take the distinct-scan
+    // fallback there and must agree with the primary's manifest answer
+    val replicaRoot = freshRoot()
+    new graft.catalog.ReplicaSync(spark, root, replicaRoot).sync()
+    val replica = new BucketCatalog(spark, replicaRoot)
+    assert(replica.liveFiles("OHLCV").isEmpty)
     val bulk = cat.listTimeframesBySymbol("OHLCV")
     assert(bulk.keySet == Set("AAPL", "MSFT", "GOOG"))
-    for (s <- bulk.keySet)
-      assert(bulk(s) == cat.listTimeframes("OHLCV", s).toSet, s"symbol $s")
+    assert(replica.listTimeframesBySymbol("OHLCV") == bulk)
+    for (c <- Seq(cat, replica); s <- bulk.keySet)
+      assert(bulk(s) == c.listTimeframes("OHLCV", s).toSet, s"symbol $s")
     assert(cat.listTimeframesBySymbol("NOPE").isEmpty)
+    assert(replica.listTimeframesBySymbol("NOPE").isEmpty)
+  }
+
+  test("a group meta without a buckets= token is refused, naming the group") {
+    val root = freshRoot()
+    // a foreign (pre-bucketing) meta: record type + schema, no layout
+    val dir = java.nio.file.Paths.get(root, "FOREIGN")
+    Files.createDirectories(dir)
+    Files.writeString(dir.resolve(BucketCatalog.MetaFile), s"fixed\n${ohlcv.json}\n")
+    val cat = new BucketCatalog(spark, root)
+    for (call <- Seq[() => Any](
+        () => cat.getInfo("FOREIGN"),
+        () => cat.layoutBuckets("FOREIGN"),
+        () => cat.write(TimeBucketKey.parse("AAPL/1Min/FOREIGN"),
+          Seq((60L, 1.0, 1.5)).toDF("Epoch", "Open", "Close")))) {
+      val e = intercept[IllegalArgumentException](call())
+      assert(e.getMessage.contains("'FOREIGN'") && e.getMessage.contains("buckets="),
+        e.getMessage)
+    }
   }
 
   test("query service: range + projection + LAST limit + wildcard") {
@@ -425,23 +451,6 @@ class CatalogSpec extends SparkSpec {
     assert(cat.read(TimeBucketKey.parse("S777/1Sec/WIDE")).head().getAs[Double]("V") == 99.0)
     // untouched symbol in ANOTHER bucket still intact
     assert(cat.read(TimeBucketKey.parse("S778/1Sec/WIDE")).count() == 1)
-  }
-
-  test("legacy per-symbol layout (symbolBuckets = 0) stays readable and writable") {
-    val root = freshRoot()
-    val cat = new BucketCatalog(spark, root)
-    val tbk = TimeBucketKey.parse("AAPL/1Min/LEG")
-    cat.create(tbk, ohlcv, isVariable = false, symbolBuckets = 0)
-    cat.write(tbk, Seq((60L, 1.0, 1.5), (120L, 2.0, 2.5)).toDF("Epoch", "Open", "Close"))
-    cat.write(tbk, Seq((120L, 9.0, 9.5)).toDF("Epoch", "Open", "Close")) // upsert
-    assert(cat.layoutBuckets("LEG").isEmpty)
-    // physical layout IS per-symbol directories
-    assert(cat.liveFiles("LEG").get.forall(_.startsWith("symbol=AAPL/timeframe=1Min/")))
-    val got = cat.read(tbk).orderBy("Epoch").collect()
-    assert(got.map(_.getAs[Double]("Open")).toSeq == Seq(1.0, 9.0))
-    assert(cat.latestYear(tbk).contains(1970))
-    cat.destroy(tbk)
-    assert(cat.listSymbols("LEG").isEmpty)
   }
 
   test("cross-process single-writer guard refuses a locked root, recovers after release") {
@@ -880,70 +889,6 @@ class CatalogSpec extends SparkSpec {
     cat2.write(vt, Seq((100L, 500, 2.0)).toDF("Epoch", "Nanoseconds", "Bid"))
     assert(TimeSeries.limit(cat2.read(vt), 10, fromStart = true).collect()
       .map(_.getAs[Double]("Bid")).toSeq == Seq(1.0, 2.0))
-  }
-
-  test("compactToBuckets migrates a legacy group to bucketed files under one manifest flip") {
-    val root = freshRoot()
-    val cat = new BucketCatalog(spark, root)
-    // a legacy group: one directory (and one commit file) per symbol
-    val symbols = (1 to 40).map(i => s"L$i")
-    cat.create(TimeBucketKey.parse(s"${symbols.head}/1Min/MIG"), ohlcv,
-      isVariable = false, symbolBuckets = 0)
-    cat.writeMulti("MIG", "1Min", symbols.zipWithIndex
-      .map { case (s, i) => (s, 60L * (i + 1), i.toDouble, i + 0.5) }
-      .toDF("symbol", "Epoch", "Open", "Close"))
-    val preVersion = cat.manifestVersions("MIG").max
-    val preRows = cat.readMulti("MIG", "1Min")
-      .select("symbol", "Epoch", "Open").collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(cat.liveFiles("MIG").get.size >= symbols.size, "legacy: one file per symbol")
-    // migrate — idempotent, one commit
-    assert(cat.compactToBuckets("MIG", symbolBuckets = 8))
-    assert(!cat.compactToBuckets("MIG", symbolBuckets = 8), "second call must no-op")
-    assert(cat.layoutBuckets("MIG").contains(8))
-    val live = cat.liveFiles("MIG").get
-    assert(live.size <= 8, s"${live.size} files live after compaction to 8 buckets")
-    assert(live.forall(_.startsWith("timeframe=1Min/year=1970/sbucket=")))
-    // content, registry, and single-symbol reads survive unchanged
-    val postRows = cat.readMulti("MIG", "1Min")
-      .select("symbol", "Epoch", "Open").collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(postRows == preRows, "compaction changed the data")
-    assert(cat.listSymbols("MIG") == symbols.sorted)
-    assert(cat.read(TimeBucketKey.parse("L7/1Min/MIG")).collect()
-      .map(_.getAs[Double]("Open")).toSeq == Seq(6.0))
-    // a reader pinned at the pre-compaction snapshot stays readable
-    // (legacy files survive the vacuum grace window)
-    val pinned = cat.readGroupAt("MIG", preVersion).get
-      .select("symbol", "Epoch", "Open").collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(pinned == preRows, "pinned pre-compaction reader diverged")
-    // subsequent wide writes commit O(buckets) files and upsert correctly
-    cat.writeMulti("MIG", "1Min", symbols.map(s => (s, 60L, 100.0, 100.5))
-      .toDF("symbol", "Epoch", "Open", "Close"))
-    assert(cat.liveFiles("MIG").get.size <= 8)
-    assert(cat.read(TimeBucketKey.parse("L7/1Min/MIG")).orderBy("Epoch").collect()
-      .map(_.getAs[Double]("Open")).toSeq == Seq(100.0, 6.0))
-    // a VARIABLE legacy group migrates too: Nanoseconds key survives,
-    // reads stay (Epoch, Nanoseconds)-sorted, record type preserved
-    val vt = TimeBucketKey.parse("V1/1Sec/MIGV")
-    cat.create(vt, StructType(Seq(
-      StructField("Epoch", LongType), StructField("Nanoseconds", IntegerType),
-      StructField("Bid", DoubleType))), isVariable = true, symbolBuckets = 0)
-    cat.write(vt, Seq((100L, 900, 3.0), (100L, 100, 1.0), (99L, 500, 0.5))
-      .toDF("Epoch", "Nanoseconds", "Bid"))
-    cat.write(TimeBucketKey.parse("V2/1Sec/MIGV"),
-      Seq((100L, 200, 7.0)).toDF("Epoch", "Nanoseconds", "Bid"))
-    assert(cat.compactToBuckets("MIGV", symbolBuckets = 4))
-    assert(cat.isVariable("MIGV"), "record type must survive migration")
-    assert(cat.layoutBuckets("MIGV").contains(4))
-    assert(TimeSeries.limit(cat.read(vt), 10, fromStart = true).collect()
-      .map(_.getAs[Double]("Bid")).toSeq == Seq(0.5, 1.0, 3.0))
-    // same (Epoch, Nanoseconds) upsert still overwrites post-migration
-    cat.write(vt, Seq((100L, 100, 8.0)).toDF("Epoch", "Nanoseconds", "Bid"))
-    assert(TimeSeries.limit(cat.read(vt), 10, fromStart = true).collect()
-      .map(_.getAs[Double]("Bid")).toSeq == Seq(0.5, 8.0, 3.0))
-    assert(cat.listSymbols("MIGV") == Seq("V1", "V2"))
   }
 
   test("orphaned staging dirs are recoverable; commits leave a durable trail (executor/wal.go role)") {

@@ -60,6 +60,25 @@ class ReplicaSpec extends SparkSpec {
     assert(replica.listSymbols("OHLCV") == Seq("AAPL"))
   }
 
+  test("destroy on a manifest-less replica root drops the bucket") {
+    val primaryRoot = Files.createTempDirectory("graft-dst-primary").toString
+    val replicaRoot = Files.createTempDirectory("graft-dst-replica").toString
+    val primary = new BucketCatalog(spark, primaryRoot)
+    val aapl = TimeBucketKey.parse("AAPL/1Min/OHLCV")
+    val msft = TimeBucketKey.parse("MSFT/1Min/OHLCV")
+    primary.write(aapl, Seq((60L, 1.0)).toDF("Epoch", "Open"))
+    primary.write(msft, Seq((60L, 2.0)).toDF("Epoch", "Open"))
+    new ReplicaSync(spark, primaryRoot, replicaRoot).sync()
+    // a promoted replica: written through its own catalog, no manifest
+    val replica = new BucketCatalog(spark, replicaRoot)
+    assert(replica.liveFiles("OHLCV").isEmpty)
+    assert(replica.listSymbols("OHLCV") == Seq("AAPL", "MSFT"))
+    replica.destroy(aapl)
+    assert(replica.listSymbols("OHLCV") == Seq("MSFT"))
+    assert(replica.read(aapl).count() == 0)
+    assert(replica.read(msft).collect().map(_.getAs[Double]("Open")).toSeq == Seq(2.0))
+  }
+
   test("commit-log rotation: marker resume without rescan, gap falls back to full resync") {
     val primaryRoot = Files.createTempDirectory("graft-rot-primary").toString
     val replicaRoot = Files.createTempDirectory("graft-rot-replica").toString
